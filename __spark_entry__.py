@@ -14225,56 +14225,6 @@ _CHECK_ORDER = [
     # first with never-checked queries slotted right after the
     # oldest stale cohort. The driver records the first 50
     # entries each round.
-    "curation_semantic",
-    "curation_v3",
-    "hard_negatives_mp",
-    "pq_dedup_groups",
-    "pq_topk",
-    "prefix_recall_curve",
-    "semantic_dedup_mp",
-    "semdedup_recall",
-    "binary_quant_drift",
-    "binary_rebuild",
-    "ivfpq_rebuild",
-    "pq_quant_drift",
-    "sq8_append_probe",
-    "sq8_quant_drift",
-    "sq8_rebuild",
-    "ann_batch_probe",
-    "ann_index_probe",
-    "ann_ivfpq_probe",
-    "ann_topk",
-    "cosine_consecutive",
-    "embedding_norms",
-    "ivf_drift_report",
-    "knn_ivf_blocked",
-    "knn_within_label",
-    "near_dup_buckets",
-    "ann_ivfpq_batch_probe",
-    "ann_ivfpq_rerank",
-    "ann_ivfpq_rerank_batch",
-    "ann_sq8_batch_probe",
-    "ann_sq8_probe",
-    "incremental_dedup",
-    "ivf_append_replay",
-    "ivf_rebuild",
-    "semantic_dedup",
-    "ann_ivf_filtered_probe",
-    "ann_ivf_topk",
-    "ann_kmeans_topk",
-    "ann_lsh_topk",
-    "ann_sq8_filtered_probe",
-    "ann_sq8_rerank",
-    "ann_sq8_rerank_batch",
-    "chunk_windows",
-    "dsir_select",
-    "gopher_repetition",
-    "hard_negatives",
-    "lm_gate_batch",
-    "ngram_decontam",
-    "sq8_recall_curve",
-    "ann_binary_filtered_probe",
-    "ann_binary_probe",
     "ann_binary_rerank",
     "ann_prefix_rerank",
     "binary_recall_curve",
@@ -14532,6 +14482,56 @@ _CHECK_ORDER = [
     "rank_auc",
     "readability_scores",
     "rendezvous_shards",
+    "ann_batch_probe",
+    "ann_binary_filtered_probe",
+    "ann_binary_probe",
+    "ann_index_probe",
+    "ann_ivf_filtered_probe",
+    "ann_ivf_topk",
+    "ann_ivfpq_batch_probe",
+    "ann_ivfpq_probe",
+    "ann_ivfpq_rerank",
+    "ann_ivfpq_rerank_batch",
+    "ann_kmeans_topk",
+    "ann_lsh_topk",
+    "ann_sq8_batch_probe",
+    "ann_sq8_filtered_probe",
+    "ann_sq8_probe",
+    "ann_sq8_rerank",
+    "ann_sq8_rerank_batch",
+    "ann_topk",
+    "binary_quant_drift",
+    "binary_rebuild",
+    "chunk_windows",
+    "cosine_consecutive",
+    "curation_semantic",
+    "curation_v3",
+    "dsir_select",
+    "embedding_norms",
+    "gopher_repetition",
+    "hard_negatives",
+    "hard_negatives_mp",
+    "incremental_dedup",
+    "ivf_append_replay",
+    "ivf_drift_report",
+    "ivf_rebuild",
+    "ivfpq_rebuild",
+    "knn_ivf_blocked",
+    "knn_within_label",
+    "lm_gate_batch",
+    "near_dup_buckets",
+    "ngram_decontam",
+    "pq_dedup_groups",
+    "pq_quant_drift",
+    "pq_topk",
+    "prefix_recall_curve",
+    "semantic_dedup",
+    "semantic_dedup_mp",
+    "semdedup_recall",
+    "sq8_append_probe",
+    "sq8_quant_drift",
+    "sq8_rebuild",
+    "sq8_recall_curve",
 ]
 
 

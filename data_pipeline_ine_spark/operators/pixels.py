@@ -269,14 +269,19 @@ def _lzw_decode_uncompressed(
     Python loop (the decode was the multimodal family's measured hot
     spot: ~16 s single-core per sweep at sf0.1, ~0.3 s vectorized).
 
-    Requires ``min_code_size ≥ 2`` (caller-enforced): at 1 the initial
-    table size 2^1+2 already equals 2^width, so the general loop
-    escalates the width after the first literal even on this pattern
-    and fixed-width extraction would misread everything after it."""
+    Returns None for ``min_code_size < 2``: at 1 the initial table
+    size 2^1+2 already equals 2^width, so the general loop escalates
+    the width after the first literal even on this pattern and
+    fixed-width extraction would misread everything after it. A
+    leading CLEAR is not required: a leading literal is rejected by
+    the follows-a-CLEAR check below, and a leading EOI decodes to
+    ``[]`` exactly as the loop does."""
+    if min_code_size < 2:
+        return None
     clear = 1 << min_code_size
     eoi = clear + 1
     codes = _lzw_codes_fixed_width(data, min_code_size + 1)
-    if codes.size == 0 or codes[0] != clear:
+    if codes.size == 0:
         return None
     ends = np.flatnonzero(codes == eoi)
     if ends.size:
@@ -302,7 +307,7 @@ def _lzw_decode(data: bytes, min_code_size: int) -> list[int] | None:
     it validates the pattern and defers to the loop otherwise; their
     equivalence is property-tested against each other on accepted,
     rejected, and garbage streams)."""
-    if 2 <= min_code_size <= 8:
+    if min_code_size <= 8:
         fast = _lzw_decode_uncompressed(data, min_code_size)
         if fast is not None:
             return fast
