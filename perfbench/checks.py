@@ -16,6 +16,7 @@ from __future__ import annotations
 import math
 import os
 from collections import Counter
+from dataclasses import dataclass
 
 import duckdb
 
@@ -78,17 +79,23 @@ class Oracle:
 # ---------------------------------------------------------- ine_pipeline
 
 
+@dataclass
 class Layer:
-    """One view of the written layer, read back with DuckDB."""
+    """One view of the written layer: its partition directories and rows."""
 
-    def __init__(self, view_dir: str):
-        self.partitions = sorted(p for p in os.listdir(view_dir)
-                                 if not p.startswith(("_", ".")))
-        self.rows: list[dict] = []
-        if self.partitions:  # an empty view writes no partition at all
-            files = os.path.join(view_dir, "*", "*.parquet")
-            rel = duckdb.sql(f"SELECT * FROM read_parquet('{files}', hive_partitioning=true)")
-            self.rows = [dict(zip(rel.columns, r)) for r in rel.fetchall()]
+    partitions: list[str]
+    rows: list[dict]
+
+
+def read_layer(view_dir: str) -> Layer:
+    """Read one view back with DuckDB."""
+    partitions = sorted(p for p in os.listdir(view_dir) if not p.startswith(("_", ".")))
+    rows: list[dict] = []
+    if partitions:  # an empty view writes no partition at all
+        files = os.path.join(view_dir, "*", "*.parquet")
+        rel = duckdb.sql(f"SELECT * FROM read_parquet('{files}', hive_partitioning=true)")
+        rows = [dict(zip(rel.columns, r)) for r in rel.fetchall()]
+    return Layer(partitions, rows)
 
 
 def generated_values(files: dict) -> dict[tuple, set[float]]:
@@ -174,19 +181,21 @@ def step4_parity(view, rows: list[dict], ref: dict) -> list[str]:
 
 
 def self_test_oracle(cols, rows) -> list[str]:
-    """A correct output must pass and a mismatched row must fail."""
+    """A correct output must pass; a mismatched, a dropped and a duplicated
+    row must fail. Each corruption hits the row that sorts last, where only
+    the check meant for it can see it."""
     problems = []
     if compare_output(cols, rows, cols, rows):
         problems.append("oracle check fails on identical outputs")
-    if rows:
-        bad = [list(r) for r in rows]
-        i = next((i for i, v in enumerate(bad[0]) if v is not None), 0)
-        v = bad[0][i]
-        bad[0][i] = v + 1 if isinstance(v, (int, float)) else f"{v}#"
-        for name, corrupt in (("mismatched row", [tuple(bad[0]), *rows[1:]]),
-                              ("dropped row", rows[1:]),
-                              ("duplicated row", [*rows, rows[0]])):
-            if not compare_output(cols, rows, cols, corrupt):
+    n_cols, n_rows = _norm(list(cols), rows)
+    if n_rows:
+        last = list(n_rows[-1])
+        i = next((i for i, v in enumerate(last) if v is not None), 0)
+        last[i] = last[i] + 1 if isinstance(last[i], float) else f"{last[i]}#"
+        for name, corrupt in (("mismatched row", [*n_rows[:-1], tuple(last)]),
+                              ("dropped row", n_rows[:-1]),
+                              ("duplicated row", [*n_rows, n_rows[-1]])):
+            if not compare_output(cols, rows, n_cols, corrupt):
                 problems.append(f"oracle check passes a {name}")
     return problems
 
@@ -203,10 +212,7 @@ def self_test_ine(view, layer: Layer, report: dict, gen: dict, run_date: str,
     i = next(i for i, r in enumerate(rows) if r[m] is not None)
 
     def variant(new_rows, partitions=None) -> Layer:
-        c = Layer.__new__(Layer)
-        c.rows = new_rows
-        c.partitions = partitions or layer.partitions
-        return c
+        return Layer(partitions or layer.partitions, new_rows)
 
     cell = [dict(r) for r in rows]
     cell[i][m] += 1000.0

@@ -20,7 +20,7 @@ requirements"):
   string);
 - (period, station) coverage that differs between the members of a view;
 - a few duplicate (period, station) keys with a second, different value;
-- flag columns in one of six casings; ``nox_perc95`` has none.
+- flag columns in one of three casings; ``nox_perc95`` has none.
 """
 
 from __future__ import annotations
@@ -75,7 +75,6 @@ class Row:
 
 @dataclass
 class DatasetFile:
-    name: str
     path: str
     period_col: str
     period_label_col: str
@@ -150,7 +149,7 @@ def generate(out_dir: str, seed: int, views, station_map) -> dict[str, DatasetFi
                     "E" if vals.random() < 0.02 else "")
                 for p, s in keys
             ]
-            f = DatasetFile(ds, os.path.join(out_dir, f"{ds}.csv"), period_col,
+            f = DatasetFile(os.path.join(out_dir, f"{ds}.csv"), period_col,
                             label_col, station_type, flag_cols, rows)
             _write_csv(f)
             files[ds] = f

@@ -251,7 +251,7 @@ class Run:
 
         def after_pass(report):
             for name, view in views.items():
-                layer = checks.Layer(os.path.join(out_dir, "views", name))
+                layer = checks.read_layer(os.path.join(out_dir, "views", name))
                 metrics = report["metrics"][name]
                 for p in checks.layer_properties(view, layer, metrics, gen, RUN_DATE):
                     self.problems.append(f"{name}: {p}")
